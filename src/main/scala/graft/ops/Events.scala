@@ -129,7 +129,7 @@ object Events {
   /** The (from_type, to_type, gap_s, cnt) transition-gap CELLS — the
     * [[transitionGapRows]] pass folded to its bounded marginal
     * (#types² × the ≤[[sessionGapSeconds]] gap domain), session-
-    * memoized (r18, the handoffEdges convention): five gated queries
+    * memoized: five gated queries
     * (q201/q298/q238/q304 via [[sessionTransitions]], q320 directly)
     * each re-ran the identical sessionize + lead corpus windows per
     * rep — and q320 worse than once, because [[Robust.histQuantiles]]
@@ -137,14 +137,14 @@ object Events {
     * subplan per reference. The cells carry the transition matrix
     * (sum over gap_s) and the dwell histogram (project gap_s)
     * losslessly, so every consumer reads one materialized bounded
-    * artifact; the one-time build is charged to the build phase. */
+    * artifact. */
   private[graft] def transitionGapCells(s: SparkSession, d: String): DataFrame =
     graft.SessionMemo(s, d, "events:transitionGapCells")(
       transitionGapRows(s, d)
         .groupBy(col("event_type").as("from_type"),
           col("next_type").as("to_type"), col("gap_s"))
         .agg(count(lit(1)).as("cnt")))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+      _.localCheckpoint(true))
 
   private[graft] def sessionTransitions(s: SparkSession, d: String): DataFrame =
     transitionGapCells(s, d)
@@ -323,11 +323,11 @@ object Events {
       q51_sessionize(s, d)
         .select(col("user_id"), col("session_id"), col("n_events"),
           col("start_es"), col("end_es")))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+      _.localCheckpoint(true))
 
   /** The per-session ENTRY/EXIT table (user_id, session_id, entry,
     * exit, ne) — the boundary marginal of the sessionized pass,
-    * session-memoized (r18): q326 re-ran a full corpus sessionize +
+    * session-memoized: q326 re-ran a full corpus sessionize +
     * first/last window per rep, and q331 re-ran the same pass just to
     * count entry edges; both consume SESSION-grain boundary facts the
     * corpus pass determines once. entry/exit ride as order-encoding
@@ -345,7 +345,7 @@ object Events {
         .select(col("user_id"), col("session_id"),
           col("fst.event_type").as("entry"), col("lst.event_type").as("exit"),
           col("ne")))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+      _.localCheckpoint(true))
 
   val q69_range_join: Q = (s, d) => {
     // the session intervals are consumed as a materialized table (the
@@ -506,9 +506,8 @@ object Events {
     cnt * ewmaScale > 2L * ewma
 
   /** The (event_type, day, cnt) DAILY count cells — calendar×types-
-    * bounded, session-memoized (r18, the transitionGapCells
-    * convention): THIRTEEN gated queries (q186/q207/q208/q252/q274/
-    * q283/q292/q293/q295/q299/q309/q325/q332 — the whole daily
+    * bounded, session-memoized: THIRTEEN gated queries (q186/q207/
+    * q208/q252/q274/q283/q292/q293/q295/q299/q309/q325/q332 — the whole daily
     * time-series family) each re-ran the identical corpus groupBy per
     * rep; several re-paid it per REFERENCE through their own
     * Ckpt.persisted. One materialized bounded artifact per session;
@@ -520,7 +519,7 @@ object Events {
         .groupBy(col("event_type"),
           expr("CAST(es div 86400 AS BIGINT)").as("day"))
         .agg(count(lit(1)).as("cnt")))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+      _.localCheckpoint(true))
 
   val q186_ewma_rate: Q = (s, d) => {
     val daily = dailyCells(s, d)
@@ -1159,24 +1158,24 @@ object Events {
     * mergeable across batches); the per-type compare touches ≤ 16 rows
     * per type. drifted fires above 5% (500 bp). */
   /** The (event_type, epoch, bucket, cnt) drift cells over the gated
-    * corpus — session-memoized (r18): q229 and q235 fold the IDENTICAL
+    * corpus — session-memoized: q229 and q235 fold the IDENTICAL
     * cell table (one definition, [[driftCellCounts]]) but re-ran the
     * corpus pass per consumer per rep. Bounded: types × 2 epochs × 16
     * buckets. [[driftFromEvents]] stays frame-parameterized — it is
     * the streaming-parity reference. */
   private[graft] def driftCells(s: SparkSession, d: String): DataFrame =
     graft.SessionMemo(s, d, "events:driftCells")(
-      // r19: folds from the day-grain cells (epoch = driftEpoch(day),
+      // folds from the day-grain cells (epoch = driftEpoch(day),
       // midnight-aligned — exact) so ONE corpus pass serves
       // q229/q235/q321
       driftDayCells(s, d)
         .groupBy(col("event_type"), driftEpoch(col("day")).as("epoch"),
           col("bucket"))
         .agg(sum("cnt").as("cnt")))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+      _.localCheckpoint(true))
 
   /** The (event_type, day, bucket) DAY-grain drift cells — calendar ×
-    * types × 16-bounded, session-memoized (r19): q321's flappiness
+    * types × 16-bounded, session-memoized: q321's flappiness
     * audit reads them at day grain (it re-ran this corpus pass per rep
     * under a per-rep persist) and the epoch-grain [[driftCells]] table
     * folds from them exactly. The streaming twin keeps building its
@@ -1189,7 +1188,7 @@ object Events {
           driftBucketCol.as("bucket"))
         .groupBy("event_type", "day", "bucket")
         .agg(count(lit(1)).as("cnt")))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+      _.localCheckpoint(true))
 
   val q229_dist_drift: Q = (s, d) => driftTable(driftCells(s, d))
 
@@ -1233,7 +1232,7 @@ object Events {
     * windows run on the value-domain-bounded histogram (the q242/q250
     * allowlisted shape), never on event rows. */
   /** The (event_type, epoch, cent, cnt) KS cells — value-domain-
-    * bounded, session-memoized (r18): q290 and its q310 composition
+    * bounded, session-memoized: q290 and its q310 composition
     * re-ran the corpus histogram pass per rep. */
   private[graft] def ksCells(s: SparkSession, d: String): DataFrame =
     graft.SessionMemo(s, d, "events:ksCells")(
@@ -1243,7 +1242,7 @@ object Events {
           expr("CAST(round(value * 100) AS BIGINT)").as("cent"))
         .groupBy("event_type", "epoch", "cent")
         .agg(count(lit(1)).as("cnt")))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+      _.localCheckpoint(true))
 
   val q290_ks_drift: Q = (s, d) =>
     ksFromCells(ksCells(s, d))
@@ -1998,31 +1997,30 @@ object Events {
     * standard co-occurrence cost; aggregates land on the item²-bounded
     * (k1, k2) grid; per-item counts broadcast onto it. */
   val q296_item_cooccurrence: Q = (s, d) =>
-    // PRIMARY-BUILDS-FRESH (r19, SessionMemo rule 3): the memoized grid
+    // PRIMARY-BUILDS-FRESH (SessionMemo rule 3): the memoized grid
     // is q296's entire computation minus the top-20, so serving q296
-    // from it made its median a checkpoint read (0.03 s), not a
-    // measurement (r18 verdict, "What's wrong #2"). The primary runs
+    // from it would make its median a checkpoint read (0.03 s), not a
+    // measurement. The primary runs
     // the user-keyed self-join fresh every rep — same memoLabels
     // policy as q61 — while q306 (the derived consumer) reads the memo.
     cooccurrenceTopPairs(uiItems(s, d))
 
   /** The decorated (k1 < k2) co-occurrence grid over [[uiItems]] —
-    * item²-bounded, session-memoized (r18, the qiCells convention):
+    * item²-bounded, session-memoized:
     * q296 and q306 consume the same grid, and the user-keyed self-join
     * that builds it re-ran per consumer per rep even though its input
     * was already the memoized interaction set. One materialized bounded
     * artifact for the CONSUMER side (q306); the primary (q296) builds
-    * the grid fresh per rep per SessionMemo rule 3. Build charged to
-    * the build phase. */
+    * the grid fresh per rep per SessionMemo rule 3. */
   private[graft] def coocGrid(s: SparkSession, d: String): DataFrame =
     graft.SessionMemo(s, d, "events:coocGrid")(
       cooccurrencePairGrid(uiItems(s, d))
         .select("k1", "k2", "co_users", "jaccard_bp", "lift_bp"))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+      _.localCheckpoint(true))
 
   /** The distinct (user_id, item k) interaction set q296 and q306 both
     * read — session-memoized so a gate run pays the corpus extraction
-    * ONCE (one definition, one pass; the r16 advice item). */
+    * ONCE (one definition, one pass). */
   private[graft] def uiItems(s: SparkSession, d: String): DataFrame =
     graft.SessionMemo(s, d, "events:uiItems")(
       events(s, d)
@@ -3068,18 +3066,16 @@ object Events {
     * w = handoff count) — the ONE corpus lag-pass artifact the whole
     * graph family reads (q265 uses the weights; q344 the directed
     * set; q334/q341/q345 the derived undirected simple graph via
-    * [[simpleHandoffEdges]]) — session-memoized (r17 verdict item 1:
-    * five queries each re-ran the identical hour-bucketed
-    * `lag(user_id, 1)` window + distinct over the full events table
+    * [[simpleHandoffEdges]]) — session-memoized (five queries each
+    * re-ran the identical hour-bucketed `lag(user_id, 1)` window +
+    * distinct over the full events table
     * per rep; the edge list is session-invariant and orders of
     * magnitude smaller than the corpus, so at 100 TB this is one
     * persisted edge artifact instead of five corpus window scans).
     * Same hour-bucket scale decision as before (the q122/q193
     * two-phase rule): the lag window partitions by `es div 3600`, so
     * no task sorts more than an hour of traffic, at the documented
-    * cost of dropping cross-boundary handoffs. The one-time
-    * materialization is charged to the build phase
-    * ([[graft.BuildPhase]]), the sessionTable convention. */
+    * cost of dropping cross-boundary handoffs. */
   private[graft] def handoffEdges(s: SparkSession, d: String): DataFrame =
     graft.SessionMemo(s, d, "events:handoffEdges")({
       val wh = Window.partitionBy("hb").orderBy("es", "event_id")
@@ -3089,7 +3085,7 @@ object Events {
         .where(col("src").isNotNull && col("src") =!= col("user_id"))
         .groupBy(col("src"), col("user_id").as("dst"))
         .agg(count(lit(1)).as("w"))
-    })(df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+    })(_.localCheckpoint(true))
 
   /** The undirected SIMPLE handoff graph (least/greatest, distinct)
     * derived from [[handoffEdges]] — q334/q341/q345's edge set. The
@@ -3103,7 +3099,7 @@ object Events {
       handoffEdges(s, d)
         .select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
-        .distinct())(df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+        .distinct())(_.localCheckpoint(true))
 
   /** The distinct user set — the graph family's NODE table
     * (q265/q334/q344/q345 each need "every user, including the
@@ -3113,7 +3109,7 @@ object Events {
   private[graft] def userIds(s: SparkSession, d: String): DataFrame =
     graft.SessionMemo(s, d, "events:userIds")(
       events(s, d).select(col("user_id")).distinct())(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+      _.localCheckpoint(true))
 
   lazy val q265_user_pagerank: Q = (s, d) => {
     // the session-memoized edge/node artifacts (one lag pass and one

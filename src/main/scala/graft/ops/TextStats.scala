@@ -402,36 +402,15 @@ object TextStats {
   /** The trained tokenizer artifact — (merge sequence, final vocab):
     * q102 reports the merges, q104 applies the vocab; training runs once
     * per session, charged to whichever runs first (the q61/q81 memo
-    * precedent — in the sorted bench order, q102 pays). The vocab
-    * DataFrame (the part that pins localCheckpoint'd RDD blocks) lives in
-    * [[graft.SessionMemo]] under the registered "bpe:" namespace, so
-    * block-lifetime accounting stays in one place; only the small merge
-    * Vector — plain driver data, no Spark state — is memoized locally.
-    * Training produces both atomically inside the SessionMemo build, so
-    * the merge map is always populated before the vocab is served from
-    * cache. Each iteration's vocab is already localCheckpoint'd, so the
-    * cached final frame needs no further materialization (identity). */
-  private val bpeMergeMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), Vector[(Long, String, String, Long)]]
-
+    * precedent — in the sorted bench order, q102 pays). Both halves
+    * live in one [[graft.SessionMemo]] value under the "bpe:" namespace,
+    * built atomically. Each iteration's vocab is already
+    * localCheckpoint'd, so the final frame needs no further
+    * materialization. */
   private def bpeTrained(s: SparkSession, d: String)
       : (Vector[(Long, String, String, Long)], DataFrame) =
     bpeTrainedOn(s, d, "vocab", lit(true))
 
-  /** Probe hook for the merge-count scaling measurement (SURVEY §8,
-    * [[graft.BpeProbe]]): train with an arbitrary k under its own memo
-    * entry. The GATE stays at [[bpeMerges]] — this measures the
-    * driver-loop cost curve, nothing more. */
-  private[graft] def bpeTrainProbe(s: SparkSession, d: String, k: Int)
-      : Vector[(Long, String, String, Long)] =
-    bpeTrainedOn(s, d, "probe", lit(true), k)._1
-
-  /** [[bpeTrained]] over a doc subset — q106 trains on the q70 TRAIN
-    * split only, so held-out application measures generalization, not
-    * memorization. The memo key DERIVES from (label, filter SQL, merge
-    * count), so a caller reusing a label with a different filter or k
-    * gets its own cache entry — never another filter's vocab (r8
-    * ADVICE: the old caller-supplied key made that a silent hazard). */
   /** The symbolized word-count frame BPE training starts from —
     * r19: folded from [[wordIdCells]] (the doc subset arrives as a
     * predicate over the q70 id bucket `ib`, the only subset any
@@ -461,18 +440,22 @@ object TextStats {
       .agg(sum("cnt").as("freq"))
   }
 
+  /** [[bpeTrained]] over a doc subset — q106 trains on the q70 TRAIN
+    * split only, so held-out application measures generalization, not
+    * memorization. The memo key DERIVES from (label, filter SQL, merge
+    * count), so a caller reusing a label with a different filter gets
+    * its own cache entry — never another filter's vocab. */
   private def bpeTrainedOn(s: SparkSession, d: String, label: String,
-      ibFilter: Column, numMerges: Int = bpeMerges)
+      ibFilter: Column)
       : (Vector[(Long, String, String, Long)], DataFrame) = {
     val fSig = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${ibFilter.toString}|k=$numMerges".getBytes("UTF-8"))
+      .digest(s"${ibFilter.toString}|k=$bpeMerges".getBytes("UTF-8"))
       .take(4).map("%02x".format(_)).mkString
-    val memoKey = s"bpe:$label:$fSig"
-    val vocabFinal = graft.SessionMemo(s, d, memoKey) {
+    graft.SessionMemo.value(s, d, s"bpe:$label:$fSig") {
       var vocab = bpeVocab0(s, d, ibFilter).localCheckpoint(true)
       var merges = Vector.empty[(Long, String, String, Long)]
       var done = false
-      for (step <- 1 to numMerges if !done) {
+      for (step <- 1 to bpeMerges if !done) {
         val top = bpePairCounts(vocab)
           .orderBy(col("freq").desc, col("l").asc, col("r").asc)
           .limit(1).collect()
@@ -490,10 +473,8 @@ object TextStats {
           graft.Ckpt.drop(prev)
         }
       }
-      bpeMergeMemo((s, d, memoKey)) = merges
-      vocab
-    }(identity)
-    (bpeMergeMemo((s, d, memoKey)), vocabFinal)
+      (merges, vocab)
+    }
   }
 
   /** BATCHED BPE training — the scale path the sequential loop's probe
@@ -522,10 +503,10 @@ object TextStats {
   /** Per-pass accounting for [[bpeTrainBatched]]: for each pass, the
     * candidate-pool size it saw (≤ 8·batch; smaller = the pair table
     * itself is running dry) and the picks the disjointness filter
-    * admitted. The depth probe (BpeProbe) and the starvation spec read
-    * these to SEPARATE two very different underfills (r10 verdict item
-    * 3): a full pool picking < batch/2 is true disjointness starvation
-    * (the documented re-rank fallback would be required); a shrunken
+    * admitted. The starvation spec reads these to SEPARATE two very
+    * different underfills: a full pool picking < batch/2 is true
+    * disjointness starvation (the documented re-rank fallback would be
+    * required); a shrunken
     * pool underfilling is corpus exhaustion — the same early-stop the
     * sequential trainer hits, no fallback applicable. */
   final case class BpePassStats(poolSize: Int, picks: Int)
@@ -620,12 +601,6 @@ object TextStats {
   private[graft] val bpeBatchGateK = 32
   private[graft] val bpeBatchGateB = 4
 
-  /** The merge sequence is driver data computed by a deterministic
-    * multi-job loop — memoized so bench reps after the first read the
-    * Vector (the q102 training-charged-once convention). */
-  private val bpeBatchedMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Vector[(Long, String, String, Long)]]
-
   /** q138: the BATCHED BPE trainer inside the correctness gate — until
     * r10 [[bpeTrainBatched]] was only spec-pinned (batch=1 ≡ sequential)
     * while the oracle gate ran the sequential trainer; this gates the
@@ -640,7 +615,9 @@ object TextStats {
     * hash on (step, l, r, freq). */
   lazy val q138_bpe_batched: Q = (s, d) => {
     import s.implicits._
-    bpeBatchedMemo.getOrElseUpdate((s, d),
+    // the merge sequence is driver data computed by a deterministic
+    // multi-job loop — memoized so bench reps after the first read it
+    graft.SessionMemo.value(s, d, "bpe:batchedGate")(
       bpeTrainBatched(s, d, bpeBatchGateK, bpeBatchGateB))
       .toDF("step", "left_sym", "right_sym", "freq").orderBy("step")
   }
@@ -755,9 +732,7 @@ object TextStats {
     * projection — the merge table rides the plan as literals. */
   lazy val q156_bpe_model_serve: Q = (s, d) => {
     val path = graft.etl.StarBuilder.scratchDir(s, d, "bpemodel")
-    graft.BuildPhase.timed {
-      graft.SessionMemo.once(s, d, "bpe:model")(writeBpeModel(s, d, path))
-    }
+    graft.SessionMemo.once(s, d, "bpe:model")(writeBpeModel(s, d, path))
     val merges = s.read.parquet(path).orderBy("step").collect()
       .map(r => (r.getAs[String]("left_sym"), r.getAs[String]("right_sym")))
     val sym0 = concat(lit("|"), array_join(split(col("w"), ""), "||"), lit("|"))
@@ -988,7 +963,7 @@ object TextStats {
   private def dsirScore(s: SparkSession, tok: DataFrame,
       memo: Option[(String, String)] = None): DataFrame = {
     // the model aggregate is feature-space-bounded (1024/4096 cells) —
-    // with a memo key it builds ONCE per session (r18) and each rep
+    // with a memo key it builds ONCE per session and each rep
     // collects the checkpoint instead of re-running the corpus explode;
     // spec/ad-hoc callers pass no key and keep the direct build
     val modelDf = tok.groupBy("b")
@@ -996,7 +971,7 @@ object TextStats {
         sum(when(col("lang") === "en", 1L).otherwise(0L)).as("t_cnt"))
     val model = memo.fold(modelDf) { case (dir, key) =>
         graft.SessionMemo(s, dir, key)(modelDf)(
-          df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+          _.localCheckpoint(true))
       }
       .collect()
       .map(r => (r.getAs[Long]("b"), r.getAs[Long]("s_cnt"), r.getAs[Long]("t_cnt")))
@@ -1173,12 +1148,12 @@ object TextStats {
     import s.implicits._
     val tok = dsirUniTok(s, d)
     // the fitted per-class table is (#classes × 1024)-bounded — built
-    // once per session (r18); each rep collects the checkpoint instead
+    // once per session; each rep collects the checkpoint instead
     // of re-running the train-split corpus aggregate
     val fitted = graft.SessionMemo(s, d, "text:nbLangidFit")(
         tok.where(idBucket(col("doc_id")) < 80)
           .groupBy("lang", "b").agg(count(lit(1)).as("cnt")))(
-        df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+        _.localCheckpoint(true))
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     val totals = fitted.groupBy(_._1).map { case (c, rs) => c -> rs.map(_._3).sum }
@@ -1232,9 +1207,6 @@ object TextStats {
     withQuality(docs).select(col("doc_id"),
       when(col("score") >= qpTau, 1L).otherwise(-1L).as("y"))
 
-  private val qpMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(Long, Long)]]
-
   /** Integer division truncating toward zero — Scala's native Long `/`;
     * the oracle spells the same thing as a sign-guarded `//` (DuckDB's
     * `//` FLOORS, which would diverge on negative deltas). */
@@ -1255,7 +1227,7 @@ object TextStats {
     * exactly. Weights are a 4-entry driver map (the q148 model-table
     * convention), memoized per (session, dir). */
   private def qpTrain(s: SparkSession, d: String): Seq[(Long, Long)] =
-    qpMemo.getOrElseUpdate((s, d), {
+    graft.SessionMemo.value(s, d, "text:qpWeights") {
       import s.implicits._
       val train = docShingles(s, d).where(idBucket(col("doc_id")) < 80)
       val feat = graft.Ckpt.eager(qpFeatures(train))
@@ -1286,7 +1258,7 @@ object TextStats {
             tdiv(upd.get(b).map(_._1).getOrElse(0L), mis * ep))).toMap
       }
       w.toSeq.sortBy(_._1)
-    })
+    }
 
   /** q163: TRAINED quality classifier — the learned rung above q42's
     * heuristic (as q148 is above q40's): a batch perceptron DISTILLS
@@ -1308,7 +1280,7 @@ object TextStats {
     * (ties negative, both engines). */
   lazy val q163_quality_perceptron: Q = (s, d) => {
     import s.implicits._
-    val wSeq = graft.BuildPhase.timed(qpTrain(s, d))
+    val wSeq = qpTrain(s, d)
     val wdf =
       if (wSeq.isEmpty) Seq.empty[(Long, Long)].toDF("b", "w")
       else wSeq.toDF("b", "w")
@@ -1880,40 +1852,39 @@ object TextStats {
       docShingles(s, d)
         .select(idBucket(col("doc_id")).as("ib"), explode(col("words")).as("w"))
         .groupBy("ib", "w").agg(count(lit(1)).as("cw")))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+      _.localCheckpoint(true))
 
   /** The corpus unigram type-count table (w, cw) — vocabulary-bounded,
     * UNFILTERED (empty-string tokens retained so token totals fold from
-    * it), session-memoized (r18): q279 reads it filtered and derives
-    * its totals row, replacing per-rep corpus explodes. r19: folds
+    * it), session-memoized: q279 reads it filtered and derives
+    * its totals row, replacing per-rep corpus explodes. Folds
     * from [[wordIdCells]] (Σ over ib — exact), so the corpus explode
     * runs once per session for the whole word-marginal family. */
   private[graft] def unigramCounts(s: SparkSession, d: String): DataFrame =
     graft.SessionMemo(s, d, "text:unigramCounts")(
       wordIdCells(s, d).groupBy("w").agg(sum("cw").as("cw")))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+      _.localCheckpoint(true))
 
   /** The (source, word) count cells — source×vocabulary-bounded,
-    * session-memoized (r19): q307's shape audit and q316's cosine grid
+    * session-memoized: q307's shape audit and q316's cosine grid
     * both aggregated the identical (source, w, c) marginal per rep
-    * (q316 under a per-rep persist). One materialized artifact; build
-    * charged to the build phase. */
+    * (q316 under a per-rep persist). One materialized artifact. */
   private[graft] def sourceWordCells(s: SparkSession, d: String): DataFrame =
     graft.SessionMemo(s, d, "text:sourceWordCells")(
       docShingles(s, d)
         .select(col("source"), explode(col("words")).as("w"))
         .groupBy("source", "w").agg(count(lit(1)).as("c")))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+      _.localCheckpoint(true))
 
   /** The corpus bigram type-count table (bg, cab) — bigram-vocabulary-
     * bounded (type counts, not tokens — the standard LM count-table
-    * materialization), session-memoized (r18): q279's collocation
+    * materialization), session-memoized: q279's collocation
     * join and q338's frequency-of-frequencies both fold from it. */
   private[graft] def bigramCounts(s: SparkSession, d: String): DataFrame =
     graft.SessionMemo(s, d, "text:bigramCounts")(
       docShingles(s, d).select(explode(bigramsCol(col("words"))).as("bg"))
         .groupBy("bg").agg(count(lit(1)).as("cab")))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+      _.localCheckpoint(true))
 
   lazy val q279_collocations: Q = (s, d) => {
     val uni = unigramCounts(s, d).where(col("w") =!= "")

@@ -368,17 +368,26 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
   test("covMomentsAcc (q182's partition fold) equals the exploded-cell merge law on the real corpus") {
     import org.apache.spark.sql.functions._
     // one definition guarded two ways: the DuckDB gate pins the VALUES,
-    // this pins the r14 accumulator promotion against the streaming
-    // twin's exploded-cell artifact row-for-row (CovProbe re-asserts the
-    // same identity at widths 64/256/512 on synthetic vectors)
-    val vecs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    // this pins the accumulator fold against the streaming twin's
+    // exploded-cell artifact row-for-row, on the corpus's d = 64 and on
+    // synthetic d = 256 vectors (component k of vector id is md5-derived
+    // in [-1, 1], the embeddings' magnitude envelope at any width)
     def m(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.toSeq.drop(2)).toMap
-    val fold = m(Similarity.covMomentsAcc(vecs))
-    val exploded = m(Similarity.covMoments(Similarity.covCellsOf(vecs)))
-    assert(fold == exploded)
-    assert(fold.nonEmpty)
+    def assertParity(vecs: org.apache.spark.sql.DataFrame, d: Int): Unit = {
+      val fold = m(Similarity.covMomentsAcc(vecs))
+      val exploded = m(Similarity.covMoments(Similarity.covCellsOf(vecs)))
+      assert(fold == exploded, s"d=$d")
+      assert(fold.size == d * (d + 1) / 2, s"d=$d")
+    }
+    assertParity(spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v")), 64)
+    val d = 256
+    assertParity(spark.range(40).select(col("id").as("vec_id"),
+      transform(sequence(lit(0), lit(d - 1)), k =>
+        (conv(substring(md5(concat(col("id").cast("string"), lit(":"),
+          k.cast("string"))), 1, 4), 16, 10).cast("double") / 32767.5) - 1.0)
+        .as("v")), d)
   }
 
   test("q269: hard negatives rank within other labels; violations compare to the best positive") {

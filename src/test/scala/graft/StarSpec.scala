@@ -157,6 +157,46 @@ class StarSpec extends AnyFunSuite with SparkTestBase {
     assert(b.collect().head.getString(0) == "b") // no cross-dir contamination
   }
 
+  test("SessionMemo charges every build to the build phase exactly once") {
+    import graft.{BuildPhase, SessionMemo}
+    def entries(dir: String) = SessionMemo.buildLog.keys.count(k => (k._1 eq spark) && k._2 == dir)
+    BuildPhase.drain() // residue from earlier suites
+    // a checkpointed memo's first build is build-phase time, logged once
+    // under (session, dir, key)
+    val ck = SessionMemo(spark, "charge:ckpt", "test:ckpt")(spark.range(100).toDF())(
+      _.localCheckpoint(true))
+    val built = BuildPhase.drain()
+    assert(built > 0.0)
+    assert(entries("charge:ckpt") == 1)
+    assert(SessionMemo.buildLog((spark, "charge:ckpt", "test:ckpt")) >= built)
+    // a cache hit charges nothing and logs nothing new
+    assert(SessionMemo(spark, "charge:ckpt", "test:ckpt")(spark.range(1).toDF())(
+      _.localCheckpoint(true)) eq ck)
+    assert(BuildPhase.drain() == 0.0)
+    assert(entries("charge:ckpt") == 1)
+    // a memo built inside another memo's build is charged once: the
+    // outer span, which already contains the inner one
+    SessionMemo(spark, "charge:nest", "test:outer") {
+      SessionMemo(spark, "charge:nest", "test:inner") {
+        Thread.sleep(50); spark.range(1).toDF()
+      }(identity)
+    }(identity)
+    val nested = BuildPhase.drain()
+    val inner = SessionMemo.buildLog((spark, "charge:nest", "test:inner"))
+    val outer = SessionMemo.buildLog((spark, "charge:nest", "test:outer"))
+    assert(inner >= 0.05 && inner <= outer)
+    assert(nested >= inner && nested <= outer)
+    assert(entries("charge:nest") == 2)
+    // a `once` body is charged once and skipped after that
+    var runs = 0
+    SessionMemo.once(spark, "charge:once", "test:once") { Thread.sleep(20); runs += 1 }
+    assert(BuildPhase.drain() >= 0.02)
+    SessionMemo.once(spark, "charge:once", "test:once") { Thread.sleep(20); runs += 1 }
+    assert(BuildPhase.drain() == 0.0)
+    assert(runs == 1)
+    assert(entries("charge:once") == 1)
+  }
+
   test("parquet mergeSchema reads mixed-schema increments (schema evolution)") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_evo").toString
