@@ -1,9 +1,8 @@
 package graft.etl
 
-/** The storage seam of the versioned log's claim-then-commit publish
-  * (r10 verdict item 6): everything [[StarBuilder.publishSnapshot]] /
-  * [[StarBuilder.publishSnapshotExactly]] need from the filesystem is
-  * these two CONDITIONAL-CREATE primitives. POSIX supplies them as
+/** The storage seam of the versioned log's claim-then-commit publish:
+  * everything [[StarBuilder.commitSnapshot]] needs from the filesystem
+  * is these two CONDITIONAL-CREATE primitives. POSIX supplies them as
   * atomic rename-no-replace and O_EXCL file creation
   * ([[RenameCommitProtocol]]); an object store supplies them as
   * conditional PUTs (`If-None-Match: *` — S3/GCS/ABFS all have it),
@@ -11,7 +10,7 @@ package graft.etl
   * logic is exercised against both shapes by the concurrency specs.
   * The protocol logic above this seam (claim-next-free loops, exact-
   * successor refusal, orphan recovery, crash-window reasoning) is
-  * storage-agnostic and unchanged.
+  * storage-agnostic and lives in [[StarBuilder.commitSnapshot]].
   */
 trait CommitProtocol {
   /** Atomically claim the snapshot directory name `v=<v>` for the
@@ -57,25 +56,24 @@ object RenameCommitProtocol extends CommitProtocol {
   }
 }
 
-/** CONTENT-atomic create-if-absent on POSIX (the r11 advice fix): a
-  * plain O_EXCL `Files.write` is name-atomic but not content-atomic — a
-  * reader racing the commit could observe a partially written numeric
-  * body ("17" of "1723…"), which parses as a near-1970 commit instant
-  * and transiently corrupts TIMESTAMP-AS-OF resolution. Writing the
+/** CONTENT-atomic create-if-absent on POSIX: a plain O_EXCL
+  * `Files.write` is name-atomic but not content-atomic — a reader
+  * racing the commit could observe a partially written numeric body
+  * ("17" of "1723…"), which parses as a near-1970 commit instant and
+  * transiently corrupts TIMESTAMP-AS-OF resolution. Writing the
   * full payload to a temp name and `link(2)`-ing it into place keeps
   * BOTH properties: link fails EEXIST atomically when the target is
   * already claimed, and a target that exists always has its complete
   * body (the inode is fully written before it gains the visible name). */
 private[etl] object PosixAtomic {
-  /** Per-directory link(2) support (r12 advice): a transient I/O error
-    * (EIO, quota, EPERM-of-the-moment) on a link-capable filesystem
-    * must SURFACE, not silently downgrade the content-atomicity
-    * guarantee — only a directory whose own probe link fails is
-    * treated as link-less. Only the POSITIVE verdict is cached (r13
-    * review): a probe that fails during the same transient condition
-    * that tripped the caller must not pin "link-less" for the JVM's
-    * lifetime — the next call re-probes, so the degraded path persists
-    * only while the failure does. */
+  /** Per-directory link(2) support: a transient I/O error (EIO, quota,
+    * EPERM-of-the-moment) on a link-capable filesystem must SURFACE,
+    * not silently downgrade the content-atomicity guarantee — only a
+    * directory whose own probe link fails is treated as link-less.
+    * Only the POSITIVE verdict is cached: a probe that fails during the
+    * same transient condition that tripped the caller must not pin
+    * "link-less" for the JVM's lifetime — the next call re-probes, so
+    * the degraded path persists only while the failure does. */
   private val linkSupport =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
@@ -100,7 +98,7 @@ private[etl] object PosixAtomic {
 
   def createWithContent(target: java.nio.file.Path, payload: Array[Byte]): Boolean = {
     // link-less filesystem (FUSE object-store mount, VFAT): degrade to
-    // the pre-r12 O_EXCL write — name-atomic but not content-atomic;
+    // a plain O_EXCL write — name-atomic but not content-atomic;
     // history()'s epoch range check covers the partial-body window as
     // defense in depth
     def degraded(): Boolean =
@@ -123,7 +121,7 @@ private[etl] object PosixAtomic {
         case _: UnsupportedOperationException => degraded()
         case e: java.nio.file.FileSystemException =>
           // only degrade when the DIRECTORY is link-less; a transient
-          // error on a link-capable filesystem propagates (r12 advice)
+          // error on a link-capable filesystem propagates
           if (!linksSupported(target.getParent)) degraded() else throw e
       }
     } finally java.nio.file.Files.deleteIfExists(tmp)
@@ -169,9 +167,9 @@ final class ConditionalPutCommitProtocol extends CommitProtocol {
       else {
         // a conditional PUT is content-atomic server-side; model that
         // for the lock-free READERS too — stage the body and move it
-        // into the visible name in one step. finally-cleanup (r12
-        // advice): a failure between write and move must not leave an
-        // orphaned .tmp in _log for the next writer to trip over.
+        // into the visible name in one step. The finally-cleanup keeps
+        // a failure between write and move from leaving an orphaned
+        // .tmp in _log for the next writer to trip over.
         val tmp = new java.io.File(log, s".$v.commit.tmp").toPath
         try {
           java.nio.file.Files.write(tmp, payload)

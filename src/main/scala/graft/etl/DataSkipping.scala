@@ -140,6 +140,19 @@ object DataSkipping {
   private[etl] def statsColsOf(manifestColumns: Seq[String]): Seq[String] =
     manifestColumns.filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
 
+  /** The key column `tableDir`'s `_idx/bloom` sidecar indexes (pinned in
+    * the manifest: `key_col` rides every row), or None without a
+    * sidecar — how [[StarBuilder]]'s copy-on-write commits keep the
+    * sidecar covering the files they write. */
+  private[etl] def bloomKeyOf(spark: SparkSession, tableDir: String): Option[String] =
+    Option.when(new java.io.File(s"$tableDir/_idx/bloom").isDirectory) {
+      val keys = spark.read.parquet(s"$tableDir/_idx/bloom")
+        .select("key_col").distinct().collect().map(_.getString(0)).toSeq
+      require(keys.size == 1,
+        s"bloom sidecar under $tableDir indexes ${keys.mkString(", ")} — one key per sidecar")
+      keys.head
+    }
+
   /** The manifest as a DataFrame; loud failure when absent (a scan that
     * silently fell back to reading everything would hide a lost
     * manifest forever). */

@@ -261,15 +261,15 @@ object StarBuilder {
     committedVersions(warehouse).lastOption
 
   /** The commit history: (version, commit epoch-millis), log order. The
-    * commit INSTANT is the `_log` marker's BODY — [[commitMarker]]
+    * commit INSTANT is the `_log` marker's BODY — [[commitSnapshot]]
     * stamps the publish-time epoch-millis into the marker at creation,
     * so TIMESTAMP-AS-OF boundaries survive coarse filesystem timestamp
     * granularity (1 s on some filesystems) and mtime-losing restores
-    * (cp without -p, object-store downloads). Markers written before
-    * r11 are zero-byte; those fall back to mtime (r10 advice — the
-    * filter+max resolution in [[versionAsOf]] already tolerates the
-    * reordering a fallback can introduce). Planning-sized: one row per
-    * commit. */
+    * (cp without -p, object-store downloads). A marker without a
+    * plausible epoch body (zero-byte, or written by an older format)
+    * falls back to mtime; the filter+max resolution in [[versionAsOf]]
+    * tolerates the reordering a fallback can introduce. Planning-sized:
+    * one row per commit. */
   def history(warehouse: String): Seq[(Long, Long)] =
     committedVersions(warehouse).map { v =>
       val f = new java.io.File(s"$warehouse/_log/$v.commit")
@@ -317,57 +317,21 @@ object StarBuilder {
   /** Snapshot-versioned star write — the lakehouse-table property the
     * flat [[writeAll]] lacks (Delta/Iceberg being unresolvable offline,
     * SURVEY §8): every refresh lands in a fresh `$warehouse/v=<n>/`
-    * snapshot, and ONLY after every table directory is fully written
-    * does the commit marker `_log/<n>.commit` appear, its body the
-    * commit epoch-millis (the
-    * [[publishSnapshot]] claim-then-commit protocol: snapshot staged in
-    * a writer-private dot-dir, version number claimed by atomic rename,
-    * marker created create-if-absent; an object store swaps the rename
-    * and createFile for conditional PUTs). Readers resolve versions
-    * exclusively through the log, so
-    *  - a writer killed mid-snapshot leaves either an invisible staging
-    *    dot-dir or a claimed-but-uncommitted `v=<n>` orphan — both
-    *    CHANGE NOTHING for readers (StarSpec proves the orphan case),
-    *    and later writers claim past the orphan,
-    *  - a reader pinned to version n ([[readAt]]) sees immutable data
-    *    forever — snapshots are never rewritten, the time-travel
-    *    contract,
-    *  - concurrent readers of "latest" never observe a half-written
-    *    refresh (the full-overwrite writeAll's failure mode), and
-    *    concurrent WRITERS can never interleave into one snapshot or
-    *    silently overwrite each other's commit.
-    * Returns the committed version number. Old snapshots are retained
-    * for time travel; a retention sweep would delete v-dirs strictly
-    * below the oldest pinned version, log-first. */
-  def writeAllVersioned(spark: SparkSession, dir: String, warehouse: String): Long = {
-    val txn = stageDir(warehouse)
-    writeTables(spark, dir, txn.toString)
-    publishSnapshot(warehouse, txn)
-  }
+    * snapshot committed through [[commitSnapshot]], so a writer killed
+    * mid-snapshot changes nothing for readers, a reader pinned to
+    * version n ([[readAt]]) sees immutable data forever, concurrent
+    * readers of "latest" never observe a half-written refresh (the
+    * full-overwrite writeAll's failure mode), and concurrent writers
+    * never interleave into one snapshot or overwrite each other's
+    * commit. Returns the committed version number. Old snapshots are
+    * retained for time travel until [[vacuumVersions]]. */
+  def writeAllVersioned(spark: SparkSession, dir: String, warehouse: String): Long =
+    commitSnapshot(warehouse, None)(txn => writeTables(spark, dir, txn.toString))
 
-  /** A writer-private staging directory for one snapshot attempt —
-    * dot-prefixed so readers, [[Compact.leafDirs]] and the log scan all
-    * ignore it until [[publishSnapshot]] renames it into place. */
-  private def stageDir(warehouse: String): java.io.File = {
-    val f = new java.io.File(warehouse, s".txn_${java.util.UUID.randomUUID}")
-    f.mkdirs()
-    f
-  }
-
-  /** Two-phase publish of a fully-written staging dir: (1) CLAIM a
-    * version number by atomically renaming the dir to `v=<n>` — rename
-    * fails if the target exists, so two concurrent writers can never
-    * interleave into one snapshot directory; the loser just claims the
-    * next number. (2) COMMIT by create-if-absent of the `_log` marker —
-    * `Files.createFile` is the conflict-DETECTING primitive the classic
-    * protocol needs (a rename-over would silently replace a concurrent
-    * committer's marker). A crash between the phases leaves a claimed
-    * but uncommitted `v=<n>` orphan that readers never resolve and
-    * later writers skip past. */
   /** The active storage protocol (the [[CommitProtocol]] seam): POSIX
     * rename by default; swapped per-scope by [[withCommitProtocol]]
     * (the concurrency specs run both implementations through the same
-    * publish logic). */
+    * commit logic). */
   @volatile private var commitProtocol: CommitProtocol = RenameCommitProtocol
 
   /** Run `body` with `p` as the storage commit protocol, restoring the
@@ -380,54 +344,90 @@ object StarBuilder {
     try body finally commitProtocol = prev
   }
 
-  private def publishSnapshot(warehouse: String, txn: java.io.File): Long = {
-    var v = latestVersion(warehouse).getOrElse(0L) + 1
-    // a lost claim means a concurrent writer owns v=<n>: claim the next
-    // number (full-refresh snapshots are self-contained, any number works)
-    while (!commitProtocol.claimVersion(warehouse, txn, v)) v += 1
-    commitMarker(warehouse, v)
+  /** THE commit primitive of every versioned log in the engine — the
+    * warehouse's snapshots and [[LsmIndex]]'s compaction epochs. The
+    * log contract (Delta Lake's: a commit is atomic, a reader sees
+    * exactly one snapshot):
+    *  - The marker `_log/<v>.commit` is the unit of visibility. Readers
+    *    resolve versions through markers alone ([[committedVersions]]),
+    *    so a `v=<n>` directory without one is never data. Its body is
+    *    the commit epoch-millis ([[history]]).
+    *  - `stage` writes the snapshot's full content into a
+    *    writer-private `.txn_<uuid>` dir, which readers,
+    *    [[Compact.leafDirs]] and the log scan ignore. If `stage` (or the
+    *    claim) throws, the dir is deleted and nothing is claimed.
+    *  - The staged dir then CLAIMS its version name through the
+    *    protocol's atomic create-if-absent, so two writers can never
+    *    interleave into one snapshot. `from = None` (self-contained
+    *    content, a full refresh) claims the next free number, skipping
+    *    past concurrent winners and orphans. `from = Some(f)` (content
+    *    DERIVED from version f: a delete, an append, a compaction, a
+    *    CDC apply) claims exactly f + 1: a taken name is a conflict,
+    *    because claiming the next number would erase the winner's
+    *    commit from the latest view (a lost update). The caller gets a
+    *    ConcurrentModificationException and must re-read and retry —
+    *    the Delta/Iceberg optimistic-concurrency rule.
+    *  - The marker is published create-if-absent and content-atomic, so
+    *    a reader never parses a partial body.
+    * Crash windows: before the claim only an invisible `.txn_` dir is
+    * left; between claim and marker an unmarked `v=<n>` orphan, which
+    * readers ignore, claim-next-free writers skip past, exact claims
+    * refuse, and [[recoverUncommitted]] deletes; after the marker the
+    * version is committed. Returns the committed version. */
+  private[etl] def commitSnapshot(warehouse: String, from: Option[Long])(
+      stage: java.io.File => Unit): Long = {
+    val txn = new java.io.File(warehouse, s".txn_${java.util.UUID.randomUUID}")
+    txn.mkdirs()
+    val v =
+      try {
+        stage(txn)
+        from match {
+          case None =>
+            var n = latestVersion(warehouse).getOrElse(0L) + 1
+            while (!commitProtocol.claimVersion(warehouse, txn, n)) n += 1
+            n
+          case Some(f) =>
+            if (!commitProtocol.claimVersion(warehouse, txn, f + 1))
+              throw new java.util.ConcurrentModificationException(
+                if (committedVersions(warehouse).contains(f + 1))
+                  s"version ${f + 1} of $warehouse was committed by a concurrent writer " +
+                    "since this read-modify-write began; re-read latest and retry"
+                else
+                  s"version ${f + 1} of $warehouse is claimed but UNCOMMITTED — either a " +
+                    "concurrent writer mid-commit, or a crashed writer's orphan; if " +
+                    "no writer is live (e.g. on single-writer stream restart), run " +
+                    "recoverUncommitted and retry")
+            f + 1
+        }
+      } catch { case e: Throwable => Compact.deleteRecursively(txn); throw e }
+    if (!commitProtocol.putCommitMarker(warehouse, v,
+        String.valueOf(System.currentTimeMillis()).getBytes("UTF-8")))
+      throw new java.nio.file.FileAlreadyExistsException(s"$warehouse/_log/$v.commit")
+    v
   }
 
-  /** Publish a staging dir as EXACTLY version `v` — the commit primitive
-    * for read-modify-write writers ([[deleteWhere]], [[compactVersioned]],
-    * the streaming CDC sink), whose staged content DERIVES from the
-    * version they read: claiming "the next free number" after a
-    * concurrent commit would silently erase that commit from the latest
-    * view (a lost update). A full-refresh writer's snapshot is
-    * self-contained, so [[publishSnapshot]]'s claim-next-free stays
-    * correct there. On conflict the staging dir is deleted and a
-    * ConcurrentModificationException asks the caller to re-read and
-    * retry — optimistic concurrency, the Delta/Iceberg commit rule. */
-  private def publishSnapshotExactly(warehouse: String, txn: java.io.File,
-      v: Long): Long = {
-    if (!commitProtocol.claimVersion(warehouse, txn, v)) {
-      // a lost exact claim is a CONFLICT, never a retry-with-next: the
-      // staged content derives from v−1 and would erase the winner
-      Compact.deleteRecursively(txn)
-      val committed = committedVersions(warehouse).contains(v)
-      throw new java.util.ConcurrentModificationException(
-        if (committed)
-          s"version $v of $warehouse was committed by a concurrent writer " +
-            "since this read-modify-write began; re-read latest and retry"
-        else
-          s"version $v of $warehouse is claimed but UNCOMMITTED — either a " +
-            "concurrent writer mid-commit, or a crashed writer's orphan; if " +
-            "no writer is live (e.g. on single-writer stream restart), run " +
-            "recoverUncommitted and retry")
-    }
-    commitMarker(warehouse, v)
+  /** The version `version` names, or the latest committed one, with its
+    * snapshot root — refusing an uncommitted or unknown version: an
+    * aborted write's orphan directory is not data, for readers and for
+    * the writers that derive a snapshot from it. */
+  private def committedRoot(warehouse: String, version: Option[Long]): (Long, java.io.File) = {
+    val vs = committedVersions(warehouse)
+    require(vs.nonEmpty, s"no committed version in $warehouse")
+    val v = version.getOrElse(vs.last)
+    require(vs.contains(v),
+      s"version $v is not committed in $warehouse (committed: ${vs.mkString(", ")})")
+    (v, new java.io.File(s"$warehouse/v=$v"))
   }
 
-  /** Delete claimed-but-uncommitted version directories — the recovery a
-    * crashed EXACT-version writer ([[deleteWhere]], [[compactVersioned]],
-    * the streaming CDC sink) needs: its orphan claim blocks every retry
-    * of `cur + 1` forever (the claim-next-free full-refresh writers just
-    * skip past orphans). ONLY safe when no other writer can be mid-commit
-    * — the caller asserts that (the standard case: a single-writer CDC
-    * stream restarting after a crash, before the query starts; an
-    * object-store deployment replaces the whole claim/commit pair with
-    * conditional PUTs and has no orphan window at all). Returns the
-    * removed version numbers. */
+  /** Delete claimed-but-uncommitted version directories and leftover
+    * `.txn_` staging — the recovery a crashed EXACT-version writer
+    * ([[deleteWhere]], [[compactVersioned]], the streaming CDC sink)
+    * needs: its orphan claim blocks every retry of `cur + 1` forever
+    * (the claim-next-free writers just skip past orphans). ONLY safe
+    * when no other writer can be mid-commit — the caller asserts that
+    * (a single-writer CDC stream restarting after a crash, before the
+    * query starts; [[LsmIndex]] maintenance, one writer per artifact).
+    * Returns the removed version numbers. */
   def recoverUncommitted(warehouse: String): Seq[Long] = {
     val entries = Option(new java.io.File(warehouse).listFiles()).getOrElse(Array.empty)
     // pre-claim crashes leave snapshot-sized .txn_ staging dirs no reader
@@ -448,8 +448,8 @@ object StarBuilder {
     * committed (stream id, batch id) pair recorded as `_log/txn.<id>.<batch>`
     * (the strict `<digits>.commit` scan ignores it), holding the version
     * that batch produced. [[txnVersion]] is how an at-least-once sink
-    * turns replay into a no-op at COMMIT level (the r9 limit: without a
-    * ledger a replayed batch re-commits an identical-content version).
+    * turns replay into a no-op at COMMIT level (without a ledger a
+    * replayed batch re-commits an identical-content version).
     * The marker lands AFTER the version commit, so a crash between the
     * two degrades exactly to the old content-level idempotence — a
     * duplicate version, never wrong data — and the next success
@@ -478,21 +478,6 @@ object StarBuilder {
     else Some(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").trim.toLong)
   }
 
-  private def commitMarker(warehouse: String, v: Long): Long = {
-    // conditional create keeps create-if-absent as the atomic commit
-    // step; the body carries the commit epoch-millis so [[history]]
-    // does not depend on filesystem mtime granularity. Both protocol
-    // implementations are CONTENT-atomic (staged body linked/moved into
-    // the visible name), so a reader never observes a partial body;
-    // history() additionally range-checks the parsed epoch as defense
-    // in depth before trusting it over mtime.
-    if (!commitProtocol.putCommitMarker(warehouse, v,
-        String.valueOf(System.currentTimeMillis()).getBytes("UTF-8")))
-      throw new java.nio.file.FileAlreadyExistsException(
-        s"$warehouse/_log/$v.commit")
-    v
-  }
-
   /** Copy-on-write snapshot compaction — OPTIMIZE as a COMMIT instead
     * of an in-place rewrite: bin-pack the latest committed snapshot's
     * tables into a NEW version directory and commit it through the
@@ -507,14 +492,11 @@ object StarBuilder {
     * formula. Returns the committed new version. */
   def compactVersioned(spark: SparkSession, warehouse: String,
       targetBytes: Long, blockSize: Int = 128 * 1024 * 1024): Long = {
-    val cur = latestVersion(warehouse).getOrElse(
-      throw new IllegalArgumentException(s"no committed version in $warehouse"))
-    val srcRoot = new java.io.File(s"$warehouse/v=$cur")
-    val txn = stageDir(warehouse)
+    val (cur, srcRoot) = committedRoot(warehouse, None)
     val tables = Option(srcRoot.listFiles()).getOrElse(Array.empty)
       .filter(d => d.isDirectory &&
         !d.getName.startsWith("_") && !d.getName.startsWith("."))
-    tables.foreach { t =>
+    def compactInto(txn: java.io.File)(t: java.io.File): Unit = {
       if (dvDir(srcRoot, t.getName).isDirectory) {
         // a deletion-vector sidecar addresses rows by (file, position):
         // any repack would break those addresses, so compaction is where
@@ -578,24 +560,15 @@ object StarBuilder {
           spark.read.parquet(srcStats.toString).columns.toIndexedSeq)
         DataSkipping.writeStats(spark, new java.io.File(txn, t.getName).toString, cols)
       }
-      // the bloom sidecar addresses files by name too; its key column is
-      // pinned in the manifest itself (`key_col` rides every row), so the
-      // compacted snapshot regenerates it with the same atomicity (r10 —
-      // closes the r9 "bloom follows the serving-index rebuild rule"
-      // limitation for warehouse tables; the ANN indexes keep that rule,
-      // and Compact.resort proves their searches survive a repack)
-      val srcBloom = new java.io.File(t, "_idx/bloom")
-      if (srcBloom.isDirectory) {
-        val keys = spark.read.parquet(srcBloom.toString)
-          .select("key_col").distinct().collect().map(_.getString(0)).toSeq
-        require(keys.size == 1,
-          s"bloom sidecar under ${t.getName} indexes ${keys.mkString(", ")} — one key per sidecar")
-        DataSkipping.writeBloom(spark,
-          new java.io.File(txn, t.getName).toString, keys.head)
-      }
+      // the bloom sidecar addresses files by name too, so the compacted
+      // snapshot regenerates it from its pinned key with the same
+      // atomicity (the ANN indexes keep the rebuild-with-the-artifact
+      // rule, and Compact.resort proves their searches survive a repack)
+      DataSkipping.bloomKeyOf(spark, t.toString).foreach(
+        DataSkipping.writeBloom(spark, new java.io.File(txn, t.getName).toString, _))
     }
     // compaction derives from v=cur: same lost-update rule as deleteWhere
-    publishSnapshotExactly(warehouse, txn, cur + 1)
+    commitSnapshot(warehouse, Some(cur))(txn => tables.foreach(compactInto(txn)))
   }
 
   /** Retention sweep: keep the newest `keep` committed versions, drop
@@ -625,12 +598,7 @@ object StarBuilder {
     * never widened. */
   def readAt(spark: SparkSession, warehouse: String, table: String,
       version: Option[Long] = None, mergeSchema: Boolean = false): DataFrame = {
-    val vs = committedVersions(warehouse)
-    require(vs.nonEmpty, s"no committed version in $warehouse")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v),
-      s"version $v is not committed in $warehouse (committed: ${vs.mkString(", ")})")
-    val root = new java.io.File(s"$warehouse/v=$v")
+    val (_, root) = committedRoot(warehouse, version)
     if (dvDir(root, table).isDirectory) applyDv(spark, root, table, mergeSchema)
     else spark.read.option("mergeSchema", mergeSchema)
       .parquet(new java.io.File(root, table).toString)
@@ -708,9 +676,7 @@ object StarBuilder {
   def deleteWhere(spark: SparkSession, warehouse: String, table: String,
       predicate: Column): Long = {
     import spark.implicits._
-    val cur = latestVersion(warehouse).getOrElse(
-      throw new IllegalArgumentException(s"no committed version in $warehouse"))
-    val srcRoot = new java.io.File(s"$warehouse/v=$cur")
+    val (cur, srcRoot) = committedRoot(warehouse, None)
     require(new java.io.File(srcRoot, table).isDirectory,
       s"table $table is not in v=$cur of $warehouse")
     val oldDv =
@@ -720,15 +686,15 @@ object StarBuilder {
     val merged = oldDv.union(
       liveWithRowId(spark, srcRoot, table).where(predicate)
         .select(col("_file").as("file"), col("_pos").as("pos")))
-    val txn = stageDir(warehouse)
-    copyTree(srcRoot, txn)
-    // the merged sidecar still READS from the source version's files;
-    // the overwrite only replaces the copied sidecar in the staging dir
-    merged.coalesce(1).write.mode("overwrite")
-      .parquet(new java.io.File(txn, s"_dv/$table").toString)
     // staged content derives from v=cur → commit exactly cur+1, or fail
     // if a concurrent writer got there first (lost-update protection)
-    publishSnapshotExactly(warehouse, txn, cur + 1)
+    commitSnapshot(warehouse, Some(cur)) { txn =>
+      copyTree(srcRoot, txn)
+      // the merged sidecar still READS from the source version's files;
+      // the overwrite only replaces the copied sidecar in the staging dir
+      merged.coalesce(1).write.mode("overwrite")
+        .parquet(new java.io.File(txn, s"_dv/$table").toString)
+    }
   }
 
   private def copyTree(src: java.io.File, dst: java.io.File): Unit =
@@ -749,13 +715,12 @@ object StarBuilder {
     * their version carries, and partition pruning applies per
     * snapshot — spec-pinned. */
   def writeTableVersioned(df: DataFrame, warehouse: String, table: String,
-      partitionBy: Seq[String] = Nil): Long = {
-    val txn = stageDir(warehouse)
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(new java.io.File(txn, table).toString)
-    publishSnapshot(warehouse, txn)
-  }
+      partitionBy: Seq[String] = Nil): Long =
+    commitSnapshot(warehouse, None) { txn =>
+      val w = df.write.mode("overwrite")
+      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+        .parquet(new java.io.File(txn, table).toString)
+    }
 
   /** Constraint-checked snapshot commit — Delta CHECK constraints / DLT
     * expectations over the versioned log: every row is tested against
@@ -784,14 +749,15 @@ object StarBuilder {
     val tagged = df.withColumn("_violated",
       array_compact(array(constraints.map { case (n, c) =>
         when(c <=> lit(false), lit(n)) }: _*)))
-    if (failFast) {
-      // persist so the rows the validation saw are EXACTLY the rows the
-      // commit writes: recomputing `df` for the write would let a
-      // non-deterministic source pass validation yet commit violating
-      // rows (r10 advice — the 'bad data never becomes a resolvable
-      // snapshot' contract holds against rand()/concurrent inputs too)
-      val persisted = tagged.persist(StorageLevel.MEMORY_AND_DISK)
-      try {
+    // persist so the rows the validation saw are EXACTLY the rows the
+    // commit writes: recomputing `df` for the write would let a
+    // non-deterministic source pass validation yet commit violating rows
+    // (the 'bad data never becomes a resolvable snapshot' contract holds
+    // against rand()/concurrent inputs too), and the quarantine split
+    // reads one source for both of its tables
+    val persisted = tagged.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      if (failFast) {
         val counts = persisted.select(explode(col("_violated")).as("c"))
           .groupBy("c").count().collect()
           .map(r => s"${r.getString(0)}=${r.getLong(1)}")
@@ -800,18 +766,14 @@ object StarBuilder {
             s"constraint violations in $table, nothing committed: " +
               counts.sorted.mkString(", "))
         writeTableVersioned(persisted.drop("_violated"), warehouse, table)
-      } finally persisted.unpersist()
-    } else {
-      val txn = stageDir(warehouse)
-      val persisted = tagged.persist(StorageLevel.MEMORY_AND_DISK)
-      persisted.where(size(col("_violated")) === 0).drop("_violated")
-        .write.mode("overwrite").parquet(new java.io.File(txn, table).toString)
-      persisted.where(size(col("_violated")) > 0)
-        .write.mode("overwrite")
-        .parquet(new java.io.File(txn, s"${table}_quarantine").toString)
-      persisted.unpersist()
-      publishSnapshot(warehouse, txn)
-    }
+      } else commitSnapshot(warehouse, None) { txn =>
+        persisted.where(size(col("_violated")) === 0).drop("_violated")
+          .write.mode("overwrite").parquet(new java.io.File(txn, table).toString)
+        persisted.where(size(col("_violated")) > 0)
+          .write.mode("overwrite")
+          .parquet(new java.io.File(txn, s"${table}_quarantine").toString)
+      }
+    } finally persisted.unpersist()
   }
 
   /** [[writeTableVersioned]] for content DERIVED from version `from` (a
@@ -820,11 +782,9 @@ object StarBuilder {
     * committed first — the staged derivation would silently erase that
     * commit if it claimed the next free number instead. */
   def writeTableVersionedFrom(df: DataFrame, warehouse: String, table: String,
-      from: Long): Long = {
-    val txn = stageDir(warehouse)
-    df.write.mode("overwrite").parquet(new java.io.File(txn, table).toString)
-    publishSnapshotExactly(warehouse, txn, from + 1)
-  }
+      from: Long): Long =
+    commitSnapshot(warehouse, Some(from))(txn =>
+      df.write.mode("overwrite").parquet(new java.io.File(txn, table).toString))
 
   /** Append `df`'s rows to `table` as a new snapshot derived from
     * version `from`: the prior snapshot is byte-copied (base data files
@@ -845,20 +805,15 @@ object StarBuilder {
     * it, and a backfill is an explicit separate rewrite. */
   def appendTableVersioned(df: DataFrame, warehouse: String, table: String,
       from: Long): Long = {
-    // the orphan rule readAt enforces holds for writers too: deriving a
-    // snapshot from a claimed-but-uncommitted v-dir would publish a
-    // crashed writer's half-write as committed data
-    require(committedVersions(warehouse).contains(from),
-      s"version $from is not committed in $warehouse — refusing to derive " +
-        "a snapshot from an uncommitted/orphan directory")
-    val srcRoot = new java.io.File(s"$warehouse/v=$from")
+    // deriving a snapshot from a claimed-but-uncommitted v-dir would
+    // publish a crashed writer's half-write as committed data
+    val (_, srcRoot) = committedRoot(warehouse, Some(from))
     require(new java.io.File(srcRoot, table).isDirectory,
       s"table $table is not in v=$from of $warehouse")
     // a data-skipping sidecar byte-copied across this append would NOT
     // cover the new files — pruned reads at from+1 would silently drop
-    // every appended row (the DataSkipping 'refuse instead' rule). The
-    // stats path with manifest maintenance is appendTableVersionedStats;
-    // a bloom sidecar grows through appendBloom on that same path.
+    // every appended row (the DataSkipping 'refuse instead' rule).
+    // appendTableVersionedStats grows both sidecars with the append.
     Seq("stats", "bloom").foreach { kind =>
       require(!new java.io.File(srcRoot, s"$table/_idx/$kind").isDirectory,
         s"table $table carries an _idx/$kind sidecar in v=$from: a plain " +
@@ -885,10 +840,10 @@ object StarBuilder {
     require(broken.isEmpty,
       s"appendTableVersioned to $table: incoming schema must be a superset " +
         s"with identical types; missing/retyped: ${broken.map(_.name).mkString(", ")}")
-    val txn = stageDir(warehouse)
-    copyTree(srcRoot, txn)
-    df.write.mode("append").parquet(new java.io.File(txn, table).toString)
-    publishSnapshotExactly(warehouse, txn, from + 1)
+    commitSnapshot(warehouse, Some(from)) { txn =>
+      copyTree(srcRoot, txn)
+      df.write.mode("append").parquet(new java.io.File(txn, table).toString)
+    }
   }
 
   /** [[writeTableVersioned]] with a clustered layout and a committed
@@ -897,24 +852,17 @@ object StarBuilder {
     * intervals on those columns are tight and disjoint), the per-file
     * manifest is written INSIDE the staging dir, and both become visible
     * in one commit — a reader never sees data without its stats or
-    * stats for files that aren't there. blockSize/check-interval pins
-    * follow [[writeFactClustered]] (deterministic row groups). */
+    * stats for files that aren't there. Row groups are pinned by
+    * [[writeClustered]]. */
   def writeTableVersionedStats(df: DataFrame, warehouse: String, table: String,
       sortBy: Seq[String], statsCols: Seq[String],
       blockSize: Int = 128 * 1024 * 1024): Long = {
     require(sortBy.nonEmpty, "writeTableVersionedStats needs a clustering key")
-    val txn = stageDir(warehouse)
-    val tableDir = new java.io.File(txn, table).toString
-    df.repartitionByRange(4, sortBy.map(col): _*)
-      .sortWithinPartitions(sortBy.map(col): _*)
-      .write.mode("overwrite")
-      .option("parquet.block.size", blockSize.toString)
-      // deterministic flush points — see writeFactClustered
-      .option("parquet.block.size.row.check.min", "100")
-      .option("parquet.block.size.row.check.max", "100")
-      .parquet(tableDir)
-    DataSkipping.writeStats(df.sparkSession, tableDir, statsCols)
-    publishSnapshot(warehouse, txn)
+    commitSnapshot(warehouse, None) { txn =>
+      val tableDir = new java.io.File(txn, table).toString
+      writeClustered(df, sortBy.map(col), "overwrite", blockSize, tableDir)
+      DataSkipping.writeStats(df.sparkSession, tableDir, statsCols)
+    }
   }
 
   /** Incremental commit to a stats-carrying table — the versioned-path
@@ -922,9 +870,11 @@ object StarBuilder {
     * files are BYTE-COPIES of the current ones plus freshly written
     * files for `df`, and the `_idx/stats` manifest grows by exactly the
     * new files' rows; copied data files AND copied manifest parts stay
-    * byte-identical (DataSkippingSpec pins both). Nightly ingest
-    * therefore pays O(new data) for the table and its skipping sidecar
-    * alike — a full [[writeTableVersionedStats]] recommit would rescan
+    * byte-identical (DataSkippingSpec pins both). A `_idx/bloom`
+    * sidecar grows the same way ([[DataSkipping.appendBloom]]), so
+    * point lookups at the new version find the appended keys. Nightly
+    * ingest therefore pays O(new data) for the table and its skipping
+    * sidecars alike — a full [[writeTableVersionedStats]] recommit would rescan
     * the table for stats it already has. Same stage → claim-exactly
     * protocol as [[deleteWhere]] (a read-modify-write: commits exactly
     * cur + 1 or throws ConcurrentModificationException). The appended
@@ -935,23 +885,17 @@ object StarBuilder {
       sortBy: Seq[String], statsCols: Seq[String],
       blockSize: Int = 128 * 1024 * 1024): Long = {
     require(sortBy.nonEmpty, "appendTableVersionedStats needs a clustering key")
-    val cur = latestVersion(warehouse).getOrElse(
-      throw new IllegalArgumentException(s"no committed version in $warehouse"))
-    val srcRoot = new java.io.File(s"$warehouse/v=$cur")
+    val (cur, srcRoot) = committedRoot(warehouse, None)
     require(new java.io.File(srcRoot, table).isDirectory,
       s"table $table is not in v=$cur of $warehouse")
-    val txn = stageDir(warehouse)
-    copyTree(srcRoot, txn)
-    val tableDir = new java.io.File(txn, table).toString
-    df.repartitionByRange(4, sortBy.map(col): _*)
-      .sortWithinPartitions(sortBy.map(col): _*)
-      .write.mode("append")
-      .option("parquet.block.size", blockSize.toString)
-      .option("parquet.block.size.row.check.min", "100")
-      .option("parquet.block.size.row.check.max", "100")
-      .parquet(tableDir)
-    DataSkipping.appendStats(df.sparkSession, tableDir, statsCols)
-    publishSnapshotExactly(warehouse, txn, cur + 1)
+    commitSnapshot(warehouse, Some(cur)) { txn =>
+      copyTree(srcRoot, txn)
+      val tableDir = new java.io.File(txn, table).toString
+      writeClustered(df, sortBy.map(col), "append", blockSize, tableDir)
+      DataSkipping.appendStats(df.sparkSession, tableDir, statsCols)
+      DataSkipping.bloomKeyOf(df.sparkSession, tableDir).foreach(
+        DataSkipping.appendBloom(df.sparkSession, tableDir, _))
+    }
   }
 
   /** Manifest-pruned interval scan of a committed snapshot table: the
@@ -964,12 +908,7 @@ object StarBuilder {
     * resurrect deleted rows. */
   def readAtPruned(spark: SparkSession, warehouse: String, table: String,
       c: String, lo: Any, hi: Any, version: Option[Long] = None): DataFrame = {
-    val vs = committedVersions(warehouse)
-    require(vs.nonEmpty, s"no committed version in $warehouse")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v),
-      s"version $v is not committed in $warehouse (committed: ${vs.mkString(", ")})")
-    val root = new java.io.File(s"$warehouse/v=$v")
+    val (v, root) = committedRoot(warehouse, version)
     require(!dvDir(root, table).isDirectory,
       s"readAtPruned: $table carries a deletion vector at v=$v — " +
         "compactVersioned materializes it; pruned scans don't apply DVs")
@@ -1590,11 +1529,10 @@ object StarBuilder {
     * Per-session cost split: the BASE commit runs once per
     * (session, dir) — the base table is session-invariant, and
     * re-committing it per bench rep was pure write I/O with no content
-    * change (q121 was an r9 driver-bench outlier). Every rep still
-    * pays a full DV delete commit (byte-copy + merged sidecar — the
-    * measured operation), the log-resolved read, and the retention
-    * sweep; [[deleteWhere]] on the live view is idempotent in content,
-    * so the served rows are identical every rep. */
+    * change. Every rep still pays a full DV delete commit (byte-copy +
+    * merged sidecar — the measured operation), the log-resolved read,
+    * and the retention sweep; [[deleteWhere]] on the live view is
+    * idempotent in content, so the served rows are identical every rep. */
   val q121_delete_vectors: Q = (s, d) => {
     val wh = scratchDir(s, d, "dv")
     graft.SessionMemo.once(s, d, "dv:base") {
@@ -1625,23 +1563,32 @@ object StarBuilder {
   def writeFactClustered(spark: SparkSession, dir: String, out: String,
       sorted: Boolean, blockSize: Int = 128 * 1024 * 1024): Unit = {
     val fact = factNilaiMk(spark, dir)
-    val laid =
-      if (sorted) fact.repartitionByRange(4, col("student"))
-        .sortWithinPartitions("student")
-      // same task count, layout uncorrelated with student — the control
-      else fact.repartition(4, col("course"))
-    laid.write.mode("overwrite")
+    if (sorted) writeClustered(fact, Seq(col("student")), "overwrite", blockSize, out)
+    // same task count, layout uncorrelated with student — the control
+    else writePinned(fact.repartition(4, col("course")), "overwrite", blockSize, out)
+  }
+
+  /** Write `laid` with `blockSize` row groups and a PINNED size-check
+    * interval (the default adapts 100→10000 rows on the previous
+    * group's average row width): flush points — and so the row-group
+    * min/max stats every skip measurement asserts on — are a
+    * deterministic function of the rows alone. */
+  private def writePinned(laid: DataFrame, mode: String, blockSize: Int,
+      out: String): Unit =
+    laid.write.mode(mode)
       .option("parquet.block.size", blockSize.toString)
-      // pin the size-check interval (default adapts 100→10000 rows on
-      // the previous group's average row width): flush points — and so
-      // the row-group min/max stats the skip measurements assert on —
-      // become a deterministic function of the rows alone (r8 ADVICE:
-      // adaptive check intervals were the residual flake in the 2×
-      // sorted-vs-unsorted margin)
       .option("parquet.block.size.row.check.min", "100")
       .option("parquet.block.size.row.check.max", "100")
       .parquet(out)
-  }
+
+  /** The clustered write every sorted layout shares: range-partition on
+    * `key` into 4 write tasks and sort within each, so every file and
+    * row group covers a tight key interval; row groups per
+    * [[writePinned]]. */
+  private def writeClustered(df: DataFrame, key: Seq[Column], mode: String,
+      blockSize: Int, out: String): Unit =
+    writePinned(df.repartitionByRange(4, key: _*).sortWithinPartitions(key: _*),
+      mode, blockSize, out)
 
   /** Per-dimension bucket bits for the Z-order key (16 buckets/dim). */
   private val zBits = 4
@@ -1697,13 +1644,7 @@ object StarBuilder {
     val z = interleaved(dims.zip(bnds).map {
       case (c, b) => quantileBucket(c, b.toSeq)
     })
-    fact.repartitionByRange(4, z).sortWithinPartitions(z)
-      .write.mode("overwrite")
-      .option("parquet.block.size", blockSize.toString)
-      // deterministic flush points — see writeFactClustered
-      .option("parquet.block.size.row.check.min", "100")
-      .option("parquet.block.size.row.check.max", "100")
-      .parquet(out)
+    writeClustered(fact, Seq(z), "overwrite", blockSize, out)
   }
 
   /** q48 (A10): the surrogate-keyed time dimension itself. Deliberately

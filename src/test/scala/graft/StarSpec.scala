@@ -409,6 +409,32 @@ class StarSpec extends AnyFunSuite with SparkTestBase {
       new graft.etl.ConditionalPutCommitProtocol)(occRefusalScenario())
   }
 
+  /** A writer whose Spark write fails mid-stage must throw, commit no
+    * version, and leave no `.txn_` staging dir behind — nothing in the
+    * write path ever runs the recovery sweep, so a leaked dir would
+    * stay forever. */
+  private def failedStageScenario(): Unit = {
+    import spark.implicits._
+    import graft.etl.StarBuilder
+    val wh = java.nio.file.Files.createTempDirectory("graft_failstage").toString
+    val v1 = StarBuilder.writeTableVersioned(Seq((1L, 1.0)).toDF("k", "x"), wh, "t")
+    // the frame fails at WRITE time (inside the tasks), not at analysis
+    val failing = Seq(1L, 2L).toDF("k").withColumn("x",
+      when(col("k") > 0L, raise_error(lit("boom"))).otherwise(lit(0.0)))
+    intercept[Exception] {
+      StarBuilder.writeTableVersioned(failing, wh, "t")
+    }
+    assert(!new java.io.File(wh).listFiles().exists(_.getName.startsWith(".txn_")))
+    assert(StarBuilder.committedVersions(wh) == Seq(v1))
+    assert(StarBuilder.readAt(spark, wh, "t", None).count() == 1L)
+  }
+
+  test("a writer whose stage throws leaves no staging dir and commits nothing, under both protocols") {
+    failedStageScenario()
+    graft.etl.StarBuilder.withCommitProtocol(
+      new graft.etl.ConditionalPutCommitProtocol)(failedStageScenario())
+  }
+
   test("snapshotDiff resolves both sides through the version log") {
     import spark.implicits._
     import graft.etl.StarBuilder

@@ -70,10 +70,12 @@ def load(path):
     # "parsed" — and the short line carries no per-query map; the full
     # map lives in the file artifact the run's "detail" field names
     # (bench.json committed alongside). Unwrap, and fall back to the
-    # sibling detail artifact when queries is empty.
+    # sibling detail artifact when the queries map is empty or partial
+    # (the stdout line keeps only the top medians; "nq" counts them all).
     if "parsed" in d and isinstance(d.get("parsed"), dict):
         d = d["parsed"]
-    if not d.get("queries"):
+    queries = d.get("queries")
+    if not queries or len(queries) < d.get("nq", 0):
         detail = os.path.join(os.path.dirname(os.path.abspath(path)),
                               d.get("detail", "bench.json"))
         if os.path.exists(detail):
